@@ -74,9 +74,16 @@ final class Ctx(val spark: SparkSession, val opts: Opts) {
 /** A workload: set-up (inputs, table, warm-up), a round of operations
   * with a fixed mix, and checks and measurements once the loop ends. */
 trait Workload {
-  /** Rounds the timed loop runs at least, whatever `--seconds` says. */
-  def minRounds: Int = 1
-  def setup(): Unit
+  /** Rounds the timed loop runs at least, whatever `--seconds` says: two,
+    * so that each op kind's latency is a median of at least two. */
+  def minRounds: Int = 2
+  /** Where [[build]] puts the inputs the timed loop uses. */
+  def home: String
+  /** Generate the inputs, or build the table, under `to`. Set-up calls it
+    * several times, the last time with [[home]]. */
+  def build(to: String): Unit
+  /** Untimed rounds after the last build, so the timed loop starts warm. */
+  def warmUp(): Unit
   def round(): Unit
   def finish(): Unit
   /** Per-layer metrics of this workload's layers, from the traced loop. */
@@ -97,24 +104,6 @@ object Stats {
   }
 
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
-
-  /** Harrell-Davis estimate of the `q` quantile: a Beta-weighted average
-    * of all order statistics. Where ops of different kinds meet at the
-    * quantile it moves smoothly instead of jumping from one kind's
-    * latency to the next, so it repeats better across runs than the
-    * plain sample quantile. */
-  def hdQuantile(xs: Seq[Double], q: Double): Double = {
-    require(xs.nonEmpty, "quantile of no values")
-    val s = xs.sorted
-    val n = s.size
-    if (n == 1) s.head
-    else {
-      val beta = new org.apache.commons.math3.distribution.BetaDistribution(
-        null, (n + 1) * q, (n + 1) * (1 - q))
-      s.indices.map(i => s(i) * (beta.cumulativeProbability((i + 1).toDouble / n) -
-        beta.cumulativeProbability(i.toDouble / n))).sum
-    }
-  }
 
   /** Median latency per op kind, for the kinds present. */
   def p50ByKind(recs: Seq[OpRec], names: (String, String)*): Map[String, Double] =

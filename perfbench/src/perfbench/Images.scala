@@ -36,7 +36,12 @@ object Images {
     "red_eyes smile looking_at_viewer outdoors indoors sky tree dress shirt " +
     "ponytail braid hat school_uniform night day flower water").split(" ").toIndexedSeq
 
-  def key(id: Long): String = f"img$id%09d"
+  /** The key of row `id`. Written keys are even; the odd key after each
+    * is [[gapKey]]. */
+  def key(id: Long): String = f"img${2 * id}%09d"
+
+  /** A key between those of `id` and `id + 1` that is never written. */
+  def gapKey(id: Long): String = f"img${2 * id + 1}%09d"
 
   def gen(id: Long, rev: Long, rnd: Random): Img = Img(key(id),
     512 + 64 * rnd.nextInt(9), 512 + 64 * rnd.nextInt(9),

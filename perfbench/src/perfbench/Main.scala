@@ -38,8 +38,8 @@ final case class LoopStats(recs: Seq[OpRec], rounds: Int) {
   def wallS: Double = recs.groupBy(_.kind).values
     .map(rs => Stats.median(rs.map(_.ms)) * rs.size / rounds).sum / 1000.0
   def rowsPerS: Double = recs.map(_.rows).sum.toDouble / rounds / wallS
-  def p50: Double = Stats.hdQuantile(ms, 0.5)
-  def p90: Double = Stats.hdQuantile(ms, 0.9)
+  def p50: Double = Stats.quantile(ms, 0.5)
+  def p90: Double = Stats.quantile(ms, 0.9)
 }
 
 object Main {
@@ -88,6 +88,43 @@ object Main {
     case w => throw new IllegalArgumentException(s"unknown workload $w")
   }
 
+  /** Builds per set-up; `setup_s` counts their median. */
+  val SetupBuilds = 3
+
+  /** Seconds of set-up after the session is up: the median of
+    * [[SetupBuilds]] builds of the inputs, the last one at the workload's
+    * home, then the warm-up round. */
+  private def setup(ctx: Ctx, w: Workload): Double = {
+    val targets = (1 until SetupBuilds).map(i => ctx.dir(s"setup-$i")) :+ w.home
+    val builds = targets.map { to =>
+      val t0 = System.nanoTime
+      w.build(to)
+      val s = (System.nanoTime - t0) / 1e9
+      if (to != w.home) DiskLedger.delete(to)
+      s
+    }
+    progress("inputs ready")
+    val t0 = System.nanoTime
+    w.warmUp()
+    Stats.median(builds) + (System.nanoTime - t0) / 1e9
+  }
+
+  private var calibSink = 0L
+
+  /** A fixed single-thread CPU task, timed five times: it does not depend
+    * on the program, so it tells a slower host apart from slower code. */
+  private def hostCalibration(): Seq[Double] = (1 to 5).map { _ =>
+    val t0 = System.nanoTime
+    var x = 1L
+    var i = 0
+    while (i < 50000000) {
+      x = x * 6364136223846793005L + 1442695040888963407L
+      i += 1
+    }
+    calibSink ^= x
+    (System.nanoTime - t0) / 1e6
+  }
+
   /** Rounds until `seconds` have passed, at least `minRounds`. */
   private def loop(ctx: Ctx, w: Workload): LoopStats = {
     ctx.recs = mutable.ArrayBuffer[OpRec]()
@@ -96,6 +133,7 @@ object Main {
     while (rounds < w.minRounds || (System.nanoTime - t0) / 1e9 < ctx.opts.seconds) {
       w.round()
       rounds += 1
+      progress(s"round $rounds done")
     }
     val s = LoopStats(ctx.recs.toSeq, rounds)
     ctx.recs = null
@@ -103,9 +141,10 @@ object Main {
   }
 
   private def run(ctx: Ctx): Unit = {
+    val sessionS = sinceStart
     val w = workload(ctx)
-    w.setup()
-    val setupS = sinceStart
+    val calib = mutable.ArrayBuffer[Double]() ++ hostCalibration()
+    val setupS = sessionS + setup(ctx, w)
     progress("set-up done")
     val plain = loop(ctx, w)
     progress("timed loop done")
@@ -132,9 +171,11 @@ object Main {
         Metrics.perLayer.map { case (n, unit) => n -> (all.getOrElse(n, 0.0), unit) }.toMap
       }
     w.finish()
+    calib ++= hostCalibration()
     if (!ctx.opts.trace)
       println("perfbench detail " + Json.obj((extra ++ Map(
-        "ops" -> plain.recs.size.toDouble, "rounds" -> plain.rounds.toDouble))
+        "ops" -> plain.recs.size.toDouble, "rounds" -> plain.rounds.toDouble,
+        "host_calib_ms" -> Stats.median(calib.toSeq)))
         .toSeq.sortBy(_._1).map { case (k, v) => k -> Json.num(v) }))
     ctx.mismatches.foreach(m => System.err.println(s"[perfbench] mismatch $m"))
     val correct = ctx.mismatches.isEmpty
@@ -172,6 +213,8 @@ object Metrics {
       "sources.object_read_ms" -> "ms", "sources.catalog_read_ms" -> "ms",
       "sources.read_jobs" -> "count", "sources.lookup_bytes_read" -> "bytes",
       "sources.absent_lookup_bytes_read" -> "bytes",
+      "sources.object_absent_lookup_bytes_read" -> "bytes",
+      "sources.catalog_absent_lookup_bytes_read" -> "bytes",
       "sources.lookup_useful_ratio" -> "ratio",
       "append_p50_ms" -> "ms", "upsert_p50_ms" -> "ms", "upsert_mor_p50_ms" -> "ms",
       "delete_p50_ms" -> "ms", "lookup_p50_ms" -> "ms", "scan_p50_ms" -> "ms",
